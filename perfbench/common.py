@@ -1,10 +1,9 @@
 """Shared plumbing for the benchmark workloads: the work directory inside
 the checkout, the Spark session, peak-RSS sampling of the process tree,
-order-independent row digests and small statistics helpers."""
+and small statistics helpers."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import signal
@@ -31,19 +30,6 @@ def median(xs: list[float]) -> float:
     if not xs:
         raise ValueError("median of no samples")
     return float(statistics.median(xs))
-
-
-def row_digest(rows) -> tuple[int, str]:
-    """Order-independent digest of a row collection: (count, sha256 of the
-    sorted canonical row lines). ``None`` renders as ``\\N``."""
-    lines = sorted(
-        "\x1f".join("\\N" if v is None else str(v) for v in r) for r in rows
-    )
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return len(lines), h.hexdigest()
 
 
 def _proc_children() -> dict[int, list[int]]:

@@ -1,25 +1,17 @@
 """The headline query suite: thirteen entries of
-``__spark_entry__.queries()`` over a seeded TPC-H-ish star schema plus the
-events, documents and embeddings tables, each forced through a ``noop``
-sink, each checked against its ``__spark_entry__.oracle_sql()`` twin in
-DuckDB with the hash ``scripts/check_correctness.py`` uses.
-
-The tables are generated here from the seed (same schema and value domains
-as the repository's fixed test data) so a run reads nothing outside its
-checkout.
+``__spark_entry__.queries()`` over the fixed seed-42 test tables at sf 0.01
+(a copy in ``testdata/``), each forced through a ``noop`` sink, each
+checked against its ``__spark_entry__.oracle_sql()`` twin in DuckDB with
+the hash ``scripts/check_correctness.py`` uses.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import time
 from contextlib import nullcontext
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "testdata", "sf0.01")
 
 # name -> the layer the entry's work lands in (per-layer span grouping)
 HEADLINE = {
@@ -37,169 +29,9 @@ HEADLINE = {
     "knn_brute": "operators.similarity",
     "embedding_near_dup": "operators.similarity",
 }
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-WORDS = ("the a fast slow big small key value row column table data query "
-         "scan join merge sort hash group filter order line part customer "
-         "window stream batch spark vector agg").split()
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-LANGS = ["en", "en", "fr", "es", "de", "zh"]
-DIM = 96
 
 
-def _days(rng, n, lo="1995-01-01", hi="2001-08-01"):
-    lo_d, hi_d = np.datetime64(lo, "D"), np.datetime64(hi, "D")
-    return lo_d + rng.integers(0, (hi_d - lo_d).astype(int), n).astype("timedelta64[D]")
-
-
-def generate(out_dir: str, sf: float, seed: int) -> None:
-    """Write the ten tables at scale ``sf`` (lineitem ~6M x sf rows)."""
-    rng = np.random.default_rng(seed)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def put(name, cols):
-        pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
-
-    n_cust, n_supp = max(150, int(150_000 * sf)), max(10, int(10_000 * sf))
-    n_part, n_ord = max(200, int(200_000 * sf)), max(1500, int(1_500_000 * sf))
-    put("region", {"r_regionkey": pa.array(range(5), pa.int32()), "r_name": REGIONS})
-    put("nation", {"n_nationkey": pa.array(range(25), pa.int32()),
-                   "n_name": [f"NATION_{i}" for i in range(25)],
-                   "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32())})
-    put("customer", {
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype(np.int32),
-        "c_acctbal": np.round(rng.uniform(-999, 9999, n_cust), 2),
-        "c_mktsegment": np.array(SEGMENTS)[rng.integers(0, 5, n_cust)]})
-    put("supplier", {
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype(np.int32),
-        "s_acctbal": np.round(rng.uniform(-999, 9999, n_supp), 2)})
-    put("part", {
-        "p_partkey": np.arange(n_part, dtype=np.int64),
-        "p_name": [f"{a} {b}" for a, b in zip(
-            np.array(["cold", "small", "large", "blue", "old", "new"])[rng.integers(0, 6, n_part)],
-            np.array(["widget", "bolt", "rod", "anvil", "ring"])[rng.integers(0, 5, n_part)])],
-        "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, n_part)],
-        "p_type": np.array(["ECONOMY", "PROMO", "LARGE", "MEDIUM", "STANDARD", "SMALL"])[
-            rng.integers(0, 6, n_part)],
-        "p_size": rng.integers(1, 51, n_part).astype(np.int32),
-        "p_retailprice": np.round(900 + (np.arange(n_part) % 200) / 10.0, 2)})
-    odate = _days(rng, n_ord)
-    put("orders", {
-        "o_orderkey": np.arange(n_ord, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_ord).astype(np.int64),
-        "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, n_ord)],
-        "o_totalprice": np.round(rng.uniform(1000, 500_000, n_ord), 2),
-        "o_orderdate": odate.astype("datetime64[us]"),
-        "o_orderpriority": np.array(PRIORITIES)[rng.integers(0, 5, n_ord)]})
-    lines = rng.integers(1, 8, n_ord)
-    okey = np.repeat(np.arange(n_ord, dtype=np.int64), lines)
-    n_li = len(okey)
-    lineno = np.concatenate([np.arange(1, k + 1) for k in lines]).astype(np.int32)
-    qty = rng.integers(1, 51, n_li).astype(np.float64)
-    put("lineitem", {
-        "l_orderkey": okey,
-        "l_partkey": rng.integers(0, n_part, n_li).astype(np.int64),
-        "l_suppkey": rng.integers(0, n_supp, n_li).astype(np.int64),
-        "l_linenumber": lineno,
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * rng.uniform(900, 2100, n_li), 2),
-        "l_discount": rng.integers(0, 11, n_li) / 100.0,
-        "l_tax": rng.integers(0, 9, n_li) / 100.0,
-        "l_returnflag": np.array(["N", "A", "R"])[rng.integers(0, 3, n_li)],
-        "l_linestatus": np.array(["O", "F"])[rng.integers(0, 2, n_li)],
-        "l_shipdate": (np.repeat(odate, lines)
-                       + rng.integers(1, 122, n_li).astype("timedelta64[D]")
-                       ).astype("datetime64[us]")})
-    n_ev = max(1000, int(1_000_000 * sf))
-    n_users = max(15, n_ev // 70)
-    put("events", {
-        "event_id": np.arange(n_ev, dtype=np.int64),
-        "ts": np.datetime64("2024-01-01", "us")
-        + rng.integers(0, 30 * 86_400_000_000, n_ev).astype("timedelta64[us]"),
-        "user_id": rng.integers(0, n_users, n_ev).astype(np.int64),
-        "event_type": np.array(EVENT_TYPES)[rng.integers(0, 5, n_ev)],
-        "value": np.round(rng.uniform(0, 200, n_ev), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]})
-    put("documents", _documents(rng, max(500, int(50_000 * sf))))
-    put("embeddings", _embeddings(rng, max(500, int(20_000 * sf))))
-
-
-def _documents(rng, n: int) -> dict:
-    """Random word sequences, with ~3% exact and ~4% near duplicates of
-    earlier long documents (last word replaced: 3-gram Jaccard >= 0.9, far
-    above every random pair), so the dedup entries have answers."""
-    words = np.array(WORDS)
-    texts = []
-    for i in range(n):
-        u = rng.random()
-        long_ones = [j for j in range(max(0, i - 50), i) if texts[j].count(" ") >= 40]
-        if u < 0.03 and long_ones:
-            texts.append(texts[long_ones[rng.integers(0, len(long_ones))]])
-        elif u < 0.07 and long_ones:
-            src = texts[long_ones[rng.integers(0, len(long_ones))]].split(" ")
-            src[-1] = "unique%d" % i
-            texts.append(" ".join(src))
-        else:
-            texts.append(" ".join(words[rng.integers(0, len(words), rng.integers(8, 90))]))
-    return {
-        "doc_id": np.arange(n, dtype=np.int64),
-        "text": texts,
-        "lang": np.array(LANGS)[rng.integers(0, len(LANGS), n)],
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    }
-
-
-def _embeddings(rng, n: int) -> pa.Table:
-    """Random unit vectors in 96 dimensions (a random pair's cosine is
-    about N(0, 1/96), so none reaches 0.5) plus ~5% planted near copies."""
-    vecs = rng.standard_normal((n, DIM))
-    for i in range(1, n):
-        if rng.random() < 0.05:
-            vecs[i] = vecs[rng.integers(0, i)] + 0.1 * rng.standard_normal(DIM)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    emb = pa.FixedSizeListArray.from_arrays(
-        pa.array(vecs.astype(np.float32).ravel()), DIM).cast(pa.list_(pa.float32()))
-    return pa.table({
-        "vec_id": np.arange(n, dtype=np.int64),
-        "embedding": emb,
-        "label": rng.integers(0, 10, n).astype(np.int32),
-    })
-
-
-# -- running and checking ------------------------------------------------
-
-
-def _canon(v):
-    if v is None:
-        return "\\N"
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else f"{v:.10g}"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    return str(v)
-
-
-def hash_rows(cols, rows) -> str:
-    """Column-order and row-order independent hash (check_correctness.py)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    h = hashlib.sha256()
-    for line in sorted("\x1f".join(_canon(r[i]) for i in order) for r in rows):
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
-
-
-def run_pass(spark, data_dir: str, tracer=None, walls: dict | None = None) -> float:
+def run_pass(spark, tracer=None, walls: dict | None = None) -> float:
     """Run the thirteen entries once through a noop sink; total seconds."""
     import __spark_entry__ as entry
 
@@ -207,7 +39,7 @@ def run_pass(spark, data_dir: str, tracer=None, walls: dict | None = None) -> fl
     for name, layer in HEADLINE.items():
         t0 = time.perf_counter()
         with tracer.span(layer, jobs=True) if tracer else nullcontext():
-            qs[name](spark, data_dir).write.format("noop").mode("overwrite").save()
+            qs[name](spark, DATA).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         total += dt
         if walls is not None:
@@ -215,9 +47,10 @@ def run_pass(spark, data_dir: str, tracer=None, walls: dict | None = None) -> fl
     return total
 
 
-def check(spark, data_dir: str, bench) -> None:
+def check(spark, bench) -> None:
     """Every entry's rows against its DuckDB oracle, by hash."""
     import duckdb
+    from check_correctness import TABLES, _hash_rows
 
     import __spark_entry__ as entry
 
@@ -226,15 +59,15 @@ def check(spark, data_dir: str, bench) -> None:
     try:
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{data_dir}/{t}.parquet')")
+                        f"read_parquet('{DATA}/{t}.parquet')")
         for name in HEADLINE:
-            df = qs[name](spark, data_dir)
+            df = qs[name](spark, DATA)
             cols, rows = df.columns, [tuple(r) for r in df.collect()]
             cur = con.execute(oracles[name])
             ocols, orows = [d[0] for d in cur.description], cur.fetchall()
             bench.check(f"query {name}",
                         sorted(cols) == sorted(ocols) and len(rows) == len(orows)
-                        and hash_rows(cols, rows) == hash_rows(ocols, orows),
+                        and _hash_rows(cols, rows) == _hash_rows(ocols, orows),
                         f"{len(rows)} rows vs oracle {len(orows)}")
     finally:
         con.close()

@@ -13,24 +13,33 @@ import random
 import shutil
 import time
 
-from common import Bench, log, median, row_digest, timed
+from check_correctness import _hash_rows
+from common import Bench, log, median, timed
 import oracle
 import probes
 from arc_spark.lake.table import LakeTable
 
 SIZES = {
-    # bulk: ~100k keys (200 repos x 500 paths, power-law repo skew);
-    # tail: 500 x 5000 keys, base table pre-built, tail landed per epoch
-    "full": dict(bulk_events=40_000, bulk_batch=20_000, warm_events=4_000,
-                 tail_base=30_000, tail_epochs=3, tail_batch=1_000,
-                 lookup_keys=50, reads=2, probe_events=8_000),
-    "smoke": dict(bulk_events=4_000, bulk_batch=2_000, warm_events=1_000,
-                  tail_base=4_000, tail_epochs=2, tail_batch=200,
-                  lookup_keys=8, reads=1, probe_events=2_000),
+    # bulk: ~100k keys (200 repos x 500 paths, power-law repo skew), every
+    # cycle a cold build of the whole stream, then ``READ_ROUNDS`` rounds of
+    # one read of each kind; tail: 500 x 5000 keys, base table pre-built,
+    # every cycle the ``TAIL_EPOCHS`` epochs on a fresh copy of it (each
+    # epoch under 5% of the table, so "auto" writes merge-on-read deltas).
+    # A run measures ``seconds // *_cycle_s`` cycles (about 7 s and 10 s
+    # each on a 4-core machine).
+    "full": dict(bulk_events=20_000, bulk_batch=10_000, bulk_cycle_s=6.5,
+                 tail_base=9_000, tail_batch=400, tail_cycle_s=10,
+                 lookup_keys=50, probe_events=8_000),
+    "smoke": dict(bulk_events=2_000, bulk_batch=1_000, bulk_cycle_s=1,
+                  tail_base=2_000, tail_batch=50, tail_cycle_s=1,
+                  lookup_keys=8, probe_events=1_000),
 }
+READ_ROUNDS = 2
+TAIL_EPOCHS = 2
 STAGE_PARTITIONS = 8
 TAIL_KEYSPACE = dict(n_repos=500, paths_per_repo=5000)
 COLS = ("repo", "path", "seq", "content_sha256")
+CHANGE_COLS = ("repo", "path", "seq", "op", "content_sha256")
 
 
 def _dir_bytes(path: str) -> int:
@@ -54,7 +63,7 @@ def _consumer_rows(df) -> list[tuple]:
 def _changes_rows(df) -> list[tuple]:
     return [
         (r[0], r[1], r[2], r[3], r[4] if r[3] == "upsert" else None)
-        for r in df.select("repo", "path", "seq", "op", "content_sha256").collect()
+        for r in df.select(*CHANGE_COLS).collect()
     ]
 
 
@@ -66,11 +75,12 @@ class ReplayWorkload:
         self.t = tracer
         self.size = SIZES[bench.size]
         names = ("events_per_s", "commit_s", "lookup_s", "changes_since_s", "full_read_s")
-        self.samples = {k: [] for k in names}  # the untraced cycles
+        self.samples = {k: [] for k in names}  # the measured, untraced cycles
         self.traced_samples = {k: [] for k in names}
         self.rec = None  # where the running cycle records; None while warming up
         self.cycle_s: list[float] = []
         self.outputs: list[dict] = []  # per cycle, checked after timing
+        self.traced_out = None
         self.tables = 0
 
     def fresh_root(self) -> str:
@@ -79,8 +89,13 @@ class ReplayWorkload:
         shutil.rmtree(root, ignore_errors=True)
         return root
 
+    def record(self, name: str) -> list:
+        """The running cycle's sample list ``name`` (a throwaway one while
+        warming up)."""
+        return self.rec[name] if self.rec is not None else []
+
     def _timed(self, name: str):
-        return timed(self.rec[name] if self.rec is not None else [])
+        return timed(self.record(name))
 
     # -- the consumer -------------------------------------------------
 
@@ -113,37 +128,48 @@ class ReplayWorkload:
 
     # -- the measured loop ----------------------------------------------
 
-    def measure(self, traced_cycle: bool = False) -> None:
-        """Closed loop of whole cycles until ``seconds`` is used up (at
-        least one). With ``traced_cycle`` one extra cycle runs at the end
-        with the layer probes installed, for the per-layer numbers."""
-        start = time.perf_counter()
-        while True:
-            t0 = time.perf_counter()
-            self.rec = self.samples
+    def run_cycle(self, rec) -> float:
+        """One cycle recording into ``rec``; its wall seconds."""
+        self.rec = rec
+        t0 = time.perf_counter()
+        try:
             self.outputs.append(self.cycle())
-            self.cycle_s.append(time.perf_counter() - t0)
-            spent = time.perf_counter() - start
-            if spent + median(self.cycle_s) > self.b.seconds:
-                break
-        self.rec = None
-        if traced_cycle:
-            self.t.enabled = True
-            probes.install(self.t)
-            self.window = [time.time(), None]
-            t0 = time.perf_counter()
-            try:
-                self.rec = self.traced_samples
-                with self.t.span("cycle", jobs=True):
-                    self.outputs.append(self.cycle())
-            finally:
-                self.t.unpatch_all()
-                self.t.enabled = False
-                self.rec = None
-            self.traced_cycle_s = time.perf_counter() - t0
-            self.window[1] = time.time()
+        finally:
+            self.rec = None
+        return time.perf_counter() - t0
+
+    def measure(self, traced_cycle: bool = False) -> None:
+        """Closed loop of ``seconds // cycle_s`` whole cycles (at least
+        one): the same work at any machine speed, about ``seconds`` long on
+        the reference machine. With ``traced_cycle`` instead: one untraced
+        cycle, one traced cycle with the layer probes installed, for the
+        per-layer numbers, and one more untraced cycle; the tracing overhead
+        is the traced cycle's wall over the mean of its two neighbours."""
+        n = 1 if traced_cycle else int(self.b.seconds // self.size[self.cycle_key])
+        for _ in range(max(1, n)):
+            self.cycle_s.append(self.run_cycle(self.samples))
+        if not traced_cycle:
+            return
+        self.t.enabled = True
+        probes.install(self.t)
+        self.window = [time.time(), None]
+        try:
+            with self.t.span("cycle", jobs=True):
+                traced_s = self.run_cycle(self.traced_samples)
+        finally:
+            self.t.unpatch_all()
+            self.t.enabled = False
+        self.window[1] = time.time()
+        self.traced_out = self.outputs[-1]
+        after_s = self.run_cycle(None)
+        self.trace_overhead = traced_s / ((self.cycle_s[-1] + after_s) / 2)
+        log(f"{self.name}: tracing overhead {self.trace_overhead:.4f} (traced cycle "
+            f"{traced_s:.3f} s, untraced neighbours {self.cycle_s[-1]:.3f} s and "
+            f"{after_s:.3f} s)")
 
     def metrics(self, traced: bool = False) -> dict[str, tuple[float, str]]:
+        """Medians over every sample of the measured cycles; an
+        ``events_per_s`` sample is one epoch's events over its wall."""
         s = self.traced_samples if traced else self.samples
         return {
             "events_per_s": (median(s["events_per_s"]), "1/s"),
@@ -157,35 +183,38 @@ class ReplayWorkload:
         return {k: len(v) for k, v in self.samples.items()}
 
     def layer_metrics(self) -> dict[str, float]:
-        """Storage and runner ratios of the traced (last) cycle's table."""
-        out = self.outputs[-1]
+        """Storage and runner ratios of the traced cycle's table."""
+        out = self.traced_out
         hist = table_history(out["root"], self.base_version)
         m = {
             "cdc.runner.apply_ratio": sum(e["keys_applied"] for e in out["epochs"])
             / max(1, sum(e["events_read"] for e in out["epochs"])),
             "lake.table.write_amp": hist["bytes_written"] / self.event_bytes,
-            "lake.table.space_amp": stored_rows(out["root"]) / max(1, self.live_rows),
+            "lake.table.space_amp": space_amp(self.b.spark, out["root"],
+                                              self.b.path("live-rows")),
         }
         m.update({f"lake.table.{k}": v for k, v in hist.items() if k != "bytes_written"})
         return m
 
     # -- checks ---------------------------------------------------------
 
-    def check_reads(self, out: dict, expect_lookup, expect_changes,
+    def check_reads(self, out: dict, expect_lookup, expect_changes, expect_count,
                     live: tuple) -> None:
-        """One cycle's outputs against the oracle answers; ``live`` is the
-        digest of the expected final table."""
+        """One cycle's outputs against the oracle answers, by read index;
+        ``live`` is the digest of the expected final table."""
         b = self.b
         for i, rows in enumerate(out["lookups"]):
             want = expect_lookup(i)
-            b.check("lookup", row_digest(rows) == row_digest(want),
+            b.check("lookup", _hash_rows(COLS, rows) == _hash_rows(COLS, want),
                     f"lookup {i}: {len(rows)} rows, oracle {len(want)}")
         for i, rows in enumerate(out["changes"]):
             want = expect_changes(i)
-            b.check("changes_since", row_digest(rows) == row_digest(want),
+            b.check("changes_since",
+                    _hash_rows(CHANGE_COLS, rows) == _hash_rows(CHANGE_COLS, want),
                     f"changes_since {i}: {len(rows)} rows, oracle {len(want)}")
-        for n in out["counts"]:
-            b.check("full_read", n == live[0], f"count {n}, oracle {live[0]}")
+        for i, n in enumerate(out["counts"]):
+            want = expect_count(i)
+            b.check("full_read", n == want, f"count {i}: {n}, oracle {want}")
         got = oracle.digest(LakeTable(out["root"]).read(b.spark))
         b.check("final_table", got == live, f"digest {got}, oracle {live}")
         for m in out["epochs"]:
@@ -214,12 +243,14 @@ def table_history(root: str, v0: int) -> dict[str, float]:
             "folds": folds, "delta_chain_max": chain}
 
 
-def stored_rows(root: str) -> int:
-    import pyarrow.parquet as pq
-
-    snap = LakeTable(root).snapshot()
-    return sum(pq.ParquetFile(os.path.join(root, p)).metadata.num_rows
-               for p in snap.file_list())
+def space_amp(spark, root: str, scratch: str) -> float:
+    """Table bytes (every file of the current snapshot) over live-row bytes
+    (the rows a read returns, written once as a single parquet file)."""
+    table = LakeTable(root)
+    stored = sum(os.path.getsize(os.path.join(root, p))
+                 for p in table.snapshot().file_list())
+    table.read(spark).coalesce(1).write.mode("overwrite").parquet(scratch)
+    return stored / _dir_bytes(scratch)
 
 
 # ---------------------------------------------------------------------------
@@ -227,6 +258,7 @@ def stored_rows(root: str) -> int:
 
 class BulkReplay(ReplayWorkload):
     name = "bulk_replay"
+    cycle_key = "bulk_cycle_s"
     base_version = 0  # every cycle starts from an empty table
 
     def setup(self) -> None:
@@ -243,12 +275,10 @@ class BulkReplay(ReplayWorkload):
         ev.createOrReplaceTempView("bulk_events")
         self.view = "bulk_events"
         rng = random.Random(b.seed)
-        self.key_sets = _key_sets(ev, [rng.sample(range(z["bulk_events"]), z["lookup_keys"])
-                                       for _ in range(z["reads"])])
+        self.keys = _key_sets(ev, [rng.sample(range(z["bulk_events"]), z["lookup_keys"])])[0]
         self.since = z["bulk_events"] - z["bulk_batch"] - 1
         log("bulk_replay: lookup keys chosen")
-        # warm-up: a cycle over the first two small epochs of the stream
-        self.cycle(batch=z["warm_events"] // 2, max_epochs=2, key_sets=self.key_sets[:1])
+        self.cycle()  # warm-up: one whole cycle, not recorded
 
     def replay(self, table_root: str, batch: int, max_epochs: int | None = None
                ) -> tuple[float, list]:
@@ -268,22 +298,18 @@ class BulkReplay(ReplayWorkload):
         epochs = [e for e in ctx.events if e.get("event") == "epoch.complete"]
         return wall, epochs
 
-    def cycle(self, batch: int | None = None, max_epochs: int | None = None,
-              key_sets=None) -> dict:
-        b, z = self.b, self.size
-        key_sets = key_sets or self.key_sets
+    def cycle(self) -> dict:
+        """A cold build of the whole stream, then rounds of one read of
+        each kind."""
         root = self.fresh_root()
-        wall, epochs = self.replay(root, batch or z["bulk_batch"], max_epochs)
-        b.sample_rss()
-        n_events = sum(e["events_read"] for e in epochs)
-        if self.rec is not None:
-            self.rec["events_per_s"].append(n_events / wall)
-            self.rec["commit_s"].extend(e["duration_sec"] for e in epochs)
+        wall, epochs = self.replay(root, self.size["bulk_batch"])
+        self.b.sample_rss()
+        self.record("events_per_s").extend(e["events_read"] / e["duration_sec"] for e in epochs)
+        self.record("commit_s").extend(e["duration_sec"] for e in epochs)
         table = LakeTable(root)
-        out = {"root": root, "epochs": epochs, "lookups": [], "changes": [],
-               "counts": []}
-        for keys in key_sets:
-            out["lookups"].append(self.lookup(table, keys))
+        out = {"root": root, "epochs": epochs, "lookups": [], "changes": [], "counts": []}
+        for _ in range(READ_ROUNDS):
+            out["lookups"].append(self.lookup(table, self.keys))
             out["changes"].append(self.changes_since(table, self.since))
             out["counts"].append(self.full_read(table))
         return out
@@ -292,17 +318,14 @@ class BulkReplay(ReplayWorkload):
         b, spark = self.b, self.b.spark
         last = self.size["bulk_events"] - 1
         live = oracle.digest(oracle.state(spark, self.view, last))
-        wanted = {k for ks in self.key_sets for k in ks}
+        wanted = set(self.keys)
         rows = oracle.events(spark, self.view,
                              f"{oracle.keys_clause(wanted)} OR seq > {self.since}")
-        by_key = {(r[0], r[1]): r for r in oracle.lww(
-            [r for r in rows if (r[0], r[1]) in wanted])}
+        found = oracle.lww([r for r in rows if (r[0], r[1]) in wanted])
         changed = oracle.lww([r for r in rows if r[2] > self.since], with_deletes=True)
         for out in self.outputs:
-            self.check_reads(
-                out, lambda i: [by_key[k] for k in self.key_sets[i] if k in by_key],
-                lambda i: changed, live)
-        self.live_rows = live[0]
+            self.check_reads(out, lambda i: found, lambda i: changed,
+                             lambda i: live[0], live)
 
     def kernel_input(self):
         """One epoch's worth of events, for the isolated kernel runs."""
@@ -321,6 +344,7 @@ class BulkReplay(ReplayWorkload):
 
 class TailServe(ReplayWorkload):
     name = "tail_serve"
+    cycle_key = "tail_cycle_s"
 
     def setup(self) -> None:
         from pyspark.sql import functions as F
@@ -332,7 +356,7 @@ class TailServe(ReplayWorkload):
 
         b, z = self.b, self.size
         spark = b.spark
-        n0, tb, ne = z["tail_base"], z["tail_batch"], z["tail_epochs"]
+        n0, tb, ne = z["tail_base"], z["tail_batch"], TAIL_EPOCHS
         self.base_events = write_change_stream(
             spark, b.path("base-events"), n0, seed=b.seed,
             num_partitions=STAGE_PARTITIONS, **TAIL_KEYSPACE)
@@ -340,7 +364,7 @@ class TailServe(ReplayWorkload):
         log("tail_serve: base stream staged")
         ReplayRunner(spark, self.base_events, table, batch_size=n0,
                      merge_mode="cow").run()
-        log("tail_serve: base table built")
+        log(f"tail_serve: base table built, {table.snapshot().total_rows} rows")
         self.base_version = table.current_version()
         # the tail: the same generator continued past the base, landed as
         # one Iceberg snapshot per epoch
@@ -361,56 +385,54 @@ class TailServe(ReplayWorkload):
             rng.sample(range(n0 + e * tb, n0 + (e + 1) * tb), z["lookup_keys"])
             for e in range(ne)])
         log("tail_serve: lookup keys chosen")
-        # warm-up: a one-epoch cycle on a copy of the base
-        self.cycle(epochs=1, reads=1)
+        self.cycle()  # warm-up: one whole cycle, not recorded
 
-    def cycle(self, epochs: int | None = None, reads: int | None = None) -> dict:
+    def cycle(self) -> dict:
+        """The landed epochs on a fresh copy of the base table, each
+        commit followed by a lookup, a changes_since and a full read."""
         from arc_spark.cdc import ReplayRunner
 
         b, z = self.b, self.size
         n0, tb = z["tail_base"], z["tail_batch"]
-        epochs = epochs or z["tail_epochs"]
         root = self.fresh_root()
         shutil.copytree(b.path("base-lake"), root)  # reset, outside timing
         table = LakeTable(root)
         runner = ReplayRunner(b.spark, self.landing, table, batch_size=tb,
                               events_format="iceberg")
         out = {"root": root, "epochs": [], "lookups": [], "changes": [], "counts": []}
-        commits = []
-        for e in range(epochs):
-            with timed(commits):
-                runner.run(max_epochs=1)
+        for e in range(TAIL_EPOCHS):
+            t0 = time.perf_counter()
+            runner.run(max_epochs=1)
+            wall = time.perf_counter() - t0
             b.sample_rss()
             out["epochs"].append(runner.metrics[-1])
+            self.record("commit_s").append(wall)
+            self.record("events_per_s").append(runner.metrics[-1]["events_read"] / wall)
             out["lookups"].append(self.lookup(table, self.key_sets[e]))
             out["changes"].append(self.changes_since(table, n0 + e * tb - 1))
-        for _ in range(reads or z["reads"]):
             out["counts"].append(self.full_read(table))
-        if self.rec is not None:
-            self.rec["commit_s"].extend(commits)
-            self.rec["events_per_s"].append(
-                sum(m["events_read"] for m in out["epochs"]) / sum(commits))
         return out
 
     def check(self) -> None:
         b, spark = self.b, self.b.spark
         z = self.size
         n0, tb = z["tail_base"], z["tail_batch"]
-        last = n0 + z["tail_epochs"] * tb - 1
+        last = n0 + TAIL_EPOCHS * tb - 1
         live = oracle.digest(oracle.state(spark, self.view, last))
         wanted = {k for ks in self.key_sets for k in ks}
         rows = oracle.events(spark, self.view,
                              f"{oracle.keys_clause(wanted)} OR seq >= {n0}")
-        lookups, changes = [], []
+        lookups, changes, counts = [], [], []
         for e, keys in enumerate(self.key_sets):
             lo, hi, ks = n0 + e * tb, n0 + (e + 1) * tb - 1, set(keys)
             lookups.append(oracle.lww([r for r in rows
                                        if r[2] <= hi and (r[0], r[1]) in ks]))
             changes.append(oracle.lww([r for r in rows if lo <= r[2] <= hi],
                                       with_deletes=True))
+            counts.append(oracle.state(spark, self.view, hi).count())
         for out in self.outputs:
-            self.check_reads(out, lambda i: lookups[i], lambda i: changes[i], live)
-        self.live_rows = live[0]
+            self.check_reads(out, lambda i: lookups[i], lambda i: changes[i],
+                             lambda i: counts[i], live)
 
     def kernel_input(self):
         from arc_spark.lake.iceberg_read import read_iceberg

@@ -32,8 +32,6 @@ from common import ROOT, Bench, log, median, nproc  # noqa: E402
 
 REPLAY = ("bulk_replay", "tail_serve")
 WORKLOADS = REPLAY + ("query_suite",)
-QUERY_SF = {"full": 0.02, "smoke": 0.001}
-TRACE_QUERY_SF = 0.001  # the traced tail_serve pass: per-layer spans only
 SPAN_METRICS = {  # per-layer metric -> span name whose total time it is
     "cdc.runner.max_seq_s": "cdc.runner.max_seq",
     "lake.table.merge_s": "lake.table.merge",
@@ -102,14 +100,12 @@ def kernels_isolated(w, tracer) -> None:
 def traced_queries(bench, tracer) -> None:
     import queries
 
-    data = bench.path("querydata")
-    queries.generate(data, TRACE_QUERY_SF, bench.seed)
     tracer.enabled = True
     try:
-        queries.run_pass(bench.spark, data, tracer)
+        queries.run_pass(bench.spark, tracer)
     finally:
         tracer.enabled = False
-    queries.check(bench.spark, data, bench)
+    queries.check(bench.spark, bench)
 
 
 def span_group_jobs(tracer, log_, span_name: str) -> list[int]:
@@ -141,9 +137,8 @@ def per_layer(bench, w, tracer, log_, extra: dict) -> dict[str, float]:
             log_, span_group_jobs(tracer, log_, "cdc.apply.fingerprint_isolated"))["py_sent"],
         "cdc.apply.shuffle_bytes": job_task_totals(
             log_, span_group_jobs(tracer, log_, "cdc.apply.lww_isolated"))["shuffle_write"],
-        "trace.overhead": w.traced_cycle_s / median(w.cycle_s),
+        "trace.overhead": w.trace_overhead,
     })
-    m.update(w.layer_metrics())
     m.update(session_metrics(log_, w.window[0], w.window[1], bench.cores))
     m.update(extra)
     return m
@@ -197,6 +192,7 @@ def run_replay(bench: Bench, args) -> dict:
             rate_n = w.probe_rate()
         else:
             traced_queries(bench, tracer)
+        extra.update(w.layer_metrics())
     w.check()
     log(f"[{bench.workload}] outputs checked; samples "
         + json.dumps({k: [round(x, 3) for x in v] for k, v in w.samples.items()}))
@@ -216,8 +212,7 @@ def run_replay(bench: Bench, args) -> dict:
     tracer.dump(out_path)
     log(f"[{bench.workload}] spans -> {out_path}")
     traced = w.metrics(traced=True)
-    log(f"[{bench.workload}] tracing overhead: cycle {median(w.cycle_s):.3f} s untraced, "
-        f"{w.traced_cycle_s:.3f} s traced; traced / untraced per metric "
+    log(f"[{bench.workload}] traced / untraced per metric "
         + json.dumps({k: round(traced[k][0] / e2e[k][0], 4) for k in traced}))
     return {k: (v, unit_of(k)) for k, v in layer.items()}
 
@@ -227,14 +222,12 @@ def run_queries(bench: Bench, args) -> dict:
     from spans import Tracer, read_event_log, session_metrics
 
     spark = bench.start_spark(bench.workload, event_log=bool(args.trace))
-    data = bench.path("querydata")
-    queries.generate(data, QUERY_SF[bench.size], bench.seed)
-    queries.run_pass(spark, data)  # warm-up
+    queries.run_pass(spark)  # warm-up
     bench.sample_rss()
     setup_s = time.perf_counter() - T_START
     totals, walls, start = [], {}, time.perf_counter()
     while not totals or time.perf_counter() - start + median(totals) <= bench.seconds:
-        totals.append(queries.run_pass(spark, data, walls=walls))
+        totals.append(queries.run_pass(spark, walls=walls))
         bench.sample_rss()
     log(f"[query_suite] {len(totals)} pass(es); per-query medians "
         + json.dumps({k: round(median(v), 3) for k, v in walls.items()}))
@@ -243,9 +236,9 @@ def run_queries(bench: Bench, args) -> dict:
     if args.trace:
         tracer = Tracer(spark, enabled=True)
         lo = time.time()
-        queries.run_pass(spark, data, tracer)
+        queries.run_pass(spark, tracer)
         hi = time.time()
-    queries.check(spark, data, bench)
+    queries.check(spark, bench)
     if not args.trace:
         return metrics
     bench.stop_spark()
@@ -263,7 +256,7 @@ def run_one(args) -> int:
     if not os.path.isfile(os.path.join(ROOT, "arc_spark", "session.py")):
         log(f"no arc_spark package under {ROOT}: nothing to benchmark")
         return 2
-    sys.path.insert(0, ROOT)
+    sys.path[:0] = [ROOT, os.path.join(ROOT, "scripts")]
     bench = Bench(args.workload, args.seed, args.seconds, size=args.size,
                   cores=args.cores)
     os.makedirs(bench.work, exist_ok=True)

@@ -18,7 +18,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-from common import row_digest  # noqa: E402
 from spans import Tracer, self_times, union_length  # noqa: E402
 
 BENCHMARK = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
@@ -87,12 +86,6 @@ def test_disabled_tracer_records_nothing():
 
 
 # -- oracles ----------------------------------------------------------------
-
-
-def test_row_digest_ignores_order():
-    a = [("r", "p", 1, "h"), ("r", "q", 2, None)]
-    assert row_digest(a) == row_digest(list(reversed(a)))
-    assert row_digest(a) != row_digest(a[:1])
 
 
 def test_python_lww_matches_reference_replay():
