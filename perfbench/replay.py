@@ -24,11 +24,11 @@ SIZES = {
     # cycle a cold build of the whole stream, then ``READ_ROUNDS`` rounds of
     # one read of each kind; tail: 500 x 5000 keys, base table pre-built,
     # every cycle the ``TAIL_EPOCHS`` epochs on a fresh copy of it (each
-    # epoch under 5% of the table, so "auto" writes merge-on-read deltas).
-    # A run measures ``seconds // *_cycle_s`` cycles (about 7 s and 10 s
-    # each on a 4-core machine).
-    "full": dict(bulk_events=20_000, bulk_batch=10_000, bulk_cycle_s=6.5,
-                 tail_base=9_000, tail_batch=400, tail_cycle_s=10,
+    # epoch under 5% of the table, so "auto" writes merge-on-read deltas),
+    # then ``FULL_READS`` full reads of the final table. ``*_cycle_s``: a
+    # cycle's wall on a 4-core machine, which sets how many a run measures.
+    "full": dict(bulk_events=12_000, bulk_batch=6_000, bulk_cycle_s=7.8,
+                 tail_base=9_000, tail_batch=400, tail_cycle_s=9.5,
                  lookup_keys=50, probe_events=8_000),
     "smoke": dict(bulk_events=2_000, bulk_batch=1_000, bulk_cycle_s=1,
                   tail_base=2_000, tail_batch=50, tail_cycle_s=1,
@@ -36,6 +36,7 @@ SIZES = {
 }
 READ_ROUNDS = 2
 TAIL_EPOCHS = 2
+FULL_READS = 2
 STAGE_PARTITIONS = 8
 TAIL_KEYSPACE = dict(n_repos=500, paths_per_repo=5000)
 COLS = ("repo", "path", "seq", "content_sha256")
@@ -74,7 +75,8 @@ class ReplayWorkload:
         self.b = bench
         self.t = tracer
         self.size = SIZES[bench.size]
-        names = ("events_per_s", "commit_s", "lookup_s", "changes_since_s", "full_read_s")
+        names = ("events", "replay_s", "commit_s", "lookup_s", "changes_since_s",
+                 "full_read_s")
         self.samples = {k: [] for k in names}  # the measured, untraced cycles
         self.traced_samples = {k: [] for k in names}
         self.rec = None  # where the running cycle records; None while warming up
@@ -139,13 +141,14 @@ class ReplayWorkload:
         return time.perf_counter() - t0
 
     def measure(self, traced_cycle: bool = False) -> None:
-        """Closed loop of ``seconds // cycle_s`` whole cycles (at least
-        one): the same work at any machine speed, about ``seconds`` long on
-        the reference machine. With ``traced_cycle`` instead: one untraced
-        cycle, one traced cycle with the layer probes installed, for the
-        per-layer numbers, and one more untraced cycle; the tracing overhead
-        is the traced cycle's wall over the mean of its two neighbours."""
-        n = 1 if traced_cycle else int(self.b.seconds // self.size[self.cycle_key])
+        """Closed loop of ``seconds / cycle_s`` whole cycles, rounded (at
+        least one): the same work at any machine speed, about ``seconds``
+        long on the reference machine. With ``traced_cycle`` instead: one
+        untraced cycle, one traced cycle with the layer probes installed,
+        for the per-layer numbers, and one more untraced cycle; the tracing
+        overhead is the traced cycle's wall over the mean of its two
+        neighbours."""
+        n = 1 if traced_cycle else round(self.b.seconds / self.size[self.cycle_key])
         for _ in range(max(1, n)):
             self.cycle_s.append(self.run_cycle(self.samples))
         if not traced_cycle:
@@ -167,12 +170,17 @@ class ReplayWorkload:
             f"{traced_s:.3f} s, untraced neighbours {self.cycle_s[-1]:.3f} s and "
             f"{after_s:.3f} s)")
 
+    def warm_up(self) -> None:
+        """One whole cycle, not recorded or kept, for the JIT and the Arrow
+        worker pool."""
+        shutil.rmtree(self.cycle()["root"], ignore_errors=True)
+
     def metrics(self, traced: bool = False) -> dict[str, tuple[float, str]]:
-        """Medians over every sample of the measured cycles; an
-        ``events_per_s`` sample is one epoch's events over its wall."""
+        """``events_per_s``: every measured event over the summed replay
+        walls; the rest: medians over every sample of the measured cycles."""
         s = self.traced_samples if traced else self.samples
         return {
-            "events_per_s": (median(s["events_per_s"]), "1/s"),
+            "events_per_s": (sum(s["events"]) / sum(s["replay_s"]), "1/s"),
             "commit_p50_s": (median(s["commit_s"]), "s"),
             "lookup_p50_s": (median(s["lookup_s"]), "s"),
             "changes_since_p50_s": (median(s["changes_since_s"]), "s"),
@@ -278,7 +286,7 @@ class BulkReplay(ReplayWorkload):
         self.keys = _key_sets(ev, [rng.sample(range(z["bulk_events"]), z["lookup_keys"])])[0]
         self.since = z["bulk_events"] - z["bulk_batch"] - 1
         log("bulk_replay: lookup keys chosen")
-        self.cycle()  # warm-up: one whole cycle, not recorded
+        self.warm_up()
 
     def replay(self, table_root: str, batch: int, max_epochs: int | None = None
                ) -> tuple[float, list]:
@@ -304,7 +312,8 @@ class BulkReplay(ReplayWorkload):
         root = self.fresh_root()
         wall, epochs = self.replay(root, self.size["bulk_batch"])
         self.b.sample_rss()
-        self.record("events_per_s").extend(e["events_read"] / e["duration_sec"] for e in epochs)
+        self.record("events").append(sum(e["events_read"] for e in epochs))
+        self.record("replay_s").append(wall)
         self.record("commit_s").extend(e["duration_sec"] for e in epochs)
         table = LakeTable(root)
         out = {"root": root, "epochs": epochs, "lookups": [], "changes": [], "counts": []}
@@ -349,7 +358,7 @@ class TailServe(ReplayWorkload):
     def setup(self) -> None:
         from pyspark.sql import functions as F
 
-        from arc_spark.cdc import ReplayRunner, write_change_stream
+        from arc_spark.cdc import ReplayRunner
         from arc_spark.cdc.bootstrap import create_table_for_stream
         from arc_spark.cdc.generator import change_stream
         from arc_spark.lake.iceberg_export import write_iceberg
@@ -357,27 +366,26 @@ class TailServe(ReplayWorkload):
         b, z = self.b, self.size
         spark = b.spark
         n0, tb, ne = z["tail_base"], z["tail_batch"], TAIL_EPOCHS
-        self.base_events = write_change_stream(
-            spark, b.path("base-events"), n0, seed=b.seed,
-            num_partitions=STAGE_PARTITIONS, **TAIL_KEYSPACE)
-        table, _ = create_table_for_stream(spark, self.base_events, b.path("base-lake"))
-        log("tail_serve: base stream staged")
-        ReplayRunner(spark, self.base_events, table, batch_size=n0,
-                     merge_mode="cow").run()
-        log(f"tail_serve: base table built, {table.snapshot().total_rows} rows")
-        self.base_version = table.current_version()
-        # the tail: the same generator continued past the base, landed as
-        # one Iceberg snapshot per epoch
+        # one stream, landed in the Iceberg landing zone: the base as one
+        # snapshot, then one snapshot per tail epoch
         self.landing = b.path("landing")
-        tail = change_stream(spark, n0 + ne * tb, seed=b.seed, **TAIL_KEYSPACE)
+        stream = change_stream(spark, n0 + ne * tb, seed=b.seed, **TAIL_KEYSPACE)
+        write_iceberg(spark, stream.filter(F.col("seq") < n0).coalesce(STAGE_PARTITIONS),
+                      self.landing)
+        base_bytes = _dir_bytes(os.path.join(self.landing, "data"))
         for e in range(ne):
             lo = n0 + e * tb
-            write_iceberg(spark, tail.filter((F.col("seq") >= lo) & (F.col("seq") < lo + tb))
+            write_iceberg(spark, stream.filter((F.col("seq") >= lo) & (F.col("seq") < lo + tb))
                           .coalesce(1), self.landing)
-        self.event_bytes = _dir_bytes(os.path.join(self.landing, "data"))
-        log("tail_serve: tail landed")
-        ev = spark.read.parquet(self.base_events).unionByName(
-            spark.read.parquet(os.path.join(self.landing, "data", "*")))
+        self.event_bytes = _dir_bytes(os.path.join(self.landing, "data")) - base_bytes
+        log("tail_serve: stream landed")
+        table, _ = create_table_for_stream(spark, self.landing, b.path("base-lake"),
+                                           events_format="iceberg")
+        ReplayRunner(spark, self.landing, table, batch_size=n0, merge_mode="cow",
+                     events_format="iceberg").run(max_epochs=1)
+        log(f"tail_serve: base table built, {table.snapshot().total_rows} rows")
+        self.base_version = table.current_version()
+        ev = spark.read.parquet(os.path.join(self.landing, "data", "*"))
         ev.createOrReplaceTempView("tail_events")
         self.view = "tail_events"
         rng = random.Random(b.seed)
@@ -385,11 +393,12 @@ class TailServe(ReplayWorkload):
             rng.sample(range(n0 + e * tb, n0 + (e + 1) * tb), z["lookup_keys"])
             for e in range(ne)])
         log("tail_serve: lookup keys chosen")
-        self.cycle()  # warm-up: one whole cycle, not recorded
+        self.warm_up()
 
     def cycle(self) -> dict:
         """The landed epochs on a fresh copy of the base table, each
-        commit followed by a lookup, a changes_since and a full read."""
+        commit followed by a lookup and a changes_since, then full reads
+        of the final table."""
         from arc_spark.cdc import ReplayRunner
 
         b, z = self.b, self.size
@@ -407,9 +416,11 @@ class TailServe(ReplayWorkload):
             b.sample_rss()
             out["epochs"].append(runner.metrics[-1])
             self.record("commit_s").append(wall)
-            self.record("events_per_s").append(runner.metrics[-1]["events_read"] / wall)
+            self.record("replay_s").append(wall)
+            self.record("events").append(runner.metrics[-1]["events_read"])
             out["lookups"].append(self.lookup(table, self.key_sets[e]))
             out["changes"].append(self.changes_since(table, n0 + e * tb - 1))
+        for _ in range(FULL_READS):
             out["counts"].append(self.full_read(table))
         return out
 
@@ -422,17 +433,16 @@ class TailServe(ReplayWorkload):
         wanted = {k for ks in self.key_sets for k in ks}
         rows = oracle.events(spark, self.view,
                              f"{oracle.keys_clause(wanted)} OR seq >= {n0}")
-        lookups, changes, counts = [], [], []
+        lookups, changes = [], []
         for e, keys in enumerate(self.key_sets):
             lo, hi, ks = n0 + e * tb, n0 + (e + 1) * tb - 1, set(keys)
             lookups.append(oracle.lww([r for r in rows
                                        if r[2] <= hi and (r[0], r[1]) in ks]))
             changes.append(oracle.lww([r for r in rows if lo <= r[2] <= hi],
                                       with_deletes=True))
-            counts.append(oracle.state(spark, self.view, hi).count())
         for out in self.outputs:
             self.check_reads(out, lambda i: lookups[i], lambda i: changes[i],
-                             lambda i: counts[i], live)
+                             lambda i: live[0], live)
 
     def kernel_input(self):
         from arc_spark.lake.iceberg_read import read_iceberg
